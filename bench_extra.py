@@ -5,7 +5,6 @@ per-query isolation harness from the optimization guide §1.4-1.5).
 Usage:
   python bench_extra.py time [query ...] [--runs N]   per-query walls
   python bench_extra.py explain [query ...] --out DIR --suffix SUF
-  python bench_extra.py extract-profile                headline stages
   python bench_extra.py extract-growth [--runs N]      1x vs 10x tier
 
 Timing methodology matches bench.py exactly (same _force full-column
@@ -18,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -102,7 +102,9 @@ def _ensure_big_transcripts(total_turns: int, n_convs: int,
     if not os.path.exists(path):
         os.makedirs(bench.CACHE, exist_ok=True)
         tmp = path + ".tmp"
-        os.makedirs(tmp, exist_ok=True)
+        # a run killed mid-write leaves a partial .tmp: start clean
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
         df = gen_transcripts_fast(total_turns, n_convs=n_convs)
         step = (len(df) + n_files - 1) // n_files
         for i in range(n_files):
@@ -168,47 +170,10 @@ def cmd_extract_growth(runs=3):
     if os.path.exists(sf_path):
         with open(sf_path) as f:
             sf = json.load(f)
-    sf["extract_family"] = {"extract_pipeline": row}
+    sf.setdefault("extract_family", {})["extract_pipeline"] = row
     with open(sf_path, "w") as f:
         json.dump(sf, f, indent=1)
     return row
-
-
-def cmd_extract_profile(runs=3):
-    """Stage-isolated timing of the headline extraction job: scan only,
-    scan+exchange+sort (kernels skipped), and the full job — tells
-    which part of the 600k-turn pipeline owns the wall."""
-    from pyspark.sql import functions as F
-
-    from pdfextraction_spark.operators.extract import extract_turns
-    from pdfextraction_spark.operators.partitioning import (
-        prepare_for_extraction,
-    )
-
-    spark = _session()
-    parquet = bench.ensure_bench_fixture()
-    turns = spark.read.parquet(parquet)
-    n = turns.count()
-    n_parts = max(bench.CPUS * 2, 32)
-
-    def timed(label, mk):
-        mk().count() if label != "noop" else None
-        walls = []
-        for _ in range(runs):
-            t0 = time.time()
-            mk().count()
-            walls.append(time.time() - t0)
-        med = sorted(walls)[len(walls) // 2]
-        print(json.dumps({label: round(med, 3),
-                          "tps": round(n / med, 1)}), flush=True)
-
-    timed("scan_count", lambda: turns)
-    timed("scan_full", lambda: turns.select(
-        F.bit_xor(F.xxhash64("conv_id", "turn_idx", "role", "text"))))
-    timed("prepare_only", lambda: prepare_for_extraction(turns, n_parts))
-    timed("full_extract", lambda: extract_turns(
-        prepare_for_extraction(turns, n_parts)))
-    spark.stop()
 
 
 if __name__ == "__main__":
@@ -237,8 +202,6 @@ if __name__ == "__main__":
             suffix = rest[i + 1]
             rest = rest[:i] + rest[i + 2:]
         cmd_explain(rest or bench.HEADLINE, out_dir, suffix)
-    elif cmd == "extract-profile":
-        cmd_extract_profile(runs=runs)
     elif cmd == "extract-growth":
         cmd_extract_growth(runs=runs)
     else:

@@ -10,10 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from ..config import FIELD_KEYWORDS
-
-# X1/X4 field-keyword matcher (spatial_preprocessor.py:19-25)
-FIELD_KEYWORD_RE = "(" + "|".join(FIELD_KEYWORDS) + ")"
 # X9-X11 value patterns (spatial_preprocessor.py:374-384)
 DATE_RE = r"\d{1,2}/\d{1,2}/\d{4}"
 PHONE_RE = r"\d{3}-\d{3}-\d{4}"
@@ -114,11 +110,6 @@ def is_english(col: Column, threshold: float = 0.05) -> Column:
     ascii_ratio = F.length(F.regexp_replace(col, r"[^\x00-\x7F]", "")) / \
         F.greatest(F.length(col), F.lit(1))
     return (stopword_ratio(col) >= threshold) & (ascii_ratio >= 0.9)
-
-
-def field_keyword_hit(col: Column) -> Column:
-    """X1: text contains any of the 31 field keywords."""
-    return F.lower(col).rlike(FIELD_KEYWORD_RE)
 
 
 FENCE_JSON_RE = r"```(?:json)?\s*(\{[\s\S]*?\})\s*```"

@@ -2,8 +2,9 @@
 
     transcripts scan
       -> anti-join committed partitions (resume)
-      -> salted repartition by hash(conv_id) (+ turn-range salt)
-      -> sortWithinPartitions(conv_id, turn_idx)
+      -> [only when the planned scan is narrower than the cluster]
+         salted repartition by hash(conv_id) (+ turn-range salt)
+         -> sortWithinPartitions(conv_id, turn_idx)
       -> fused mapInArrow extraction stage
       -> append output parquet (lineage columns)
       -> append per-partition manifest rows (metrics)
@@ -40,41 +41,41 @@ from .sources.manifest import (
 from .sources.transcripts import read_transcripts
 
 
+def _planned_partitions(df: DataFrame) -> int:
+    """Partition count ``df`` will run with, read from its physical
+    plan without starting a Spark job: for an exchange-free plan that
+    is the scan's split count after file bin-packing (and any
+    coalesce). A plan carrying an exchange or subquery reports 0 —
+    AQE settles its partition count only at run time, and building
+    its RDD would run the upstream stages."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    if any(k in plan for k in ("Exchange", "Subquery", "AdaptiveSparkPlan")):
+        return 0
+    return qe.toRdd().getNumPartitions()
+
+
 def extract_dataframe(
     turns: DataFrame,
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
     salt_turns: int = MEGA_CONV_TURNS_PER_SALT,
-    shuffle: bool | None = None,
 ) -> DataFrame:
     """Pure transformation: transcripts -> extracted turns (no sinks).
 
     Per-turn extraction is row-local (``extract_turns`` is a narrow
     map with no cross-row state), so the salted exchange contributes
-    nothing to correctness here — it exists to (a) give undersplit
-    inputs parallelism (a single pandas-written parquet file scans as
-    ONE task) and (b) key the resumable job's chunk/manifest
-    semantics (``run_extraction_job`` keeps it unconditionally).
-    When the scan itself already spreads the corpus across the
-    cluster, shuffling every byte before a per-row kernel doubles the
-    I/O for zero gain; at warehouse scale that is a full extra pass
-    over the corpus (guide §2.1: remove shuffles outright).
-
-    ``shuffle=None`` (auto) keeps the exchange unless the input is a
-    file scan with at least ``defaultParallelism`` files — the
-    conservative proxy for "the scan alone saturates the cluster"
-    (file count bounds split count for single-row-group files; a
-    many-file corpus written by any distributed writer passes, the
-    single-file test fixtures keep today's exchange). Values are
+    nothing to correctness; it only gives undersplit inputs
+    parallelism (a single pandas-written parquet file scans as ONE
+    task). It is taken iff the input's planned partition count
+    (:func:`_planned_partitions`) is below ``defaultParallelism``.
+    When the scan already spreads the corpus across the cluster,
+    shuffling every byte before a per-row kernel would double the I/O
+    for zero gain (guide §2.1: remove shuffles outright). Values are
     identical on both paths (pinned by test); output ROW ORDER is not
     part of the contract either way.
     """
-    if shuffle is None:
-        try:
-            n_files = len(turns.inputFiles())
-        except Exception:
-            n_files = 0
-        shuffle = n_files < turns.sparkSession.sparkContext.defaultParallelism
-    if not shuffle:
+    cores = turns.sparkSession.sparkContext.defaultParallelism
+    if _planned_partitions(turns) >= cores:
         return extract_turns(turns)
     return extract_turns(prepare_for_extraction(turns, num_partitions, salt_turns))
 
@@ -251,10 +252,9 @@ def _run_locked(
     observed = {"turns": 0, "parse_failures": 0, "blocks_dropped": 0}
     for ci, part_group in enumerate(chunks):
         chunk_df = turns.filter(F.col("partition_id").isin(part_group))
-        prepared = prepare_for_extraction(
+        extracted = extract_dataframe(
             chunk_df, max(len(part_group), 1), salt_turns
         )
-        extracted = extract_turns(prepared)
         # S8 usage-log analogue (cost_tracker.py:51-69): streaming-free
         # metrics via observe, surfaced in the job summary alongside
         # the per-partition manifest rows

@@ -40,8 +40,10 @@ def q_longest_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.length("text")).cast("long").alias("best_len"),
         F.count("*").alias("n_docs"),
         # min != max == count_distinct > 1 on the non-null text column
-        # (same value, no two-phase distinct rewrite / second shuffle)
-        (F.min("text") != F.max("text")).alias("conflict_detected"),
+        # (same value, no two-phase distinct rewrite / second shuffle);
+        # an all-null group has no distinct text, so no conflict
+        F.coalesce(F.min("text") != F.max("text"), F.lit(False))
+        .alias("conflict_detected"),
     )
 
 

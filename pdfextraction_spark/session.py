@@ -82,20 +82,16 @@ _WARMED = set()
 
 def _warm_python_workers(spark: SparkSession) -> None:
     """Pre-fork the Python worker pool with one trivial vectorized-UDF
-    job (PDFX_WARM_WORKERS=0 disables). A local[N] session forks N
-    workers the first time an Arrow/pandas stage runs, and every
-    worker imports pandas+pyarrow (~2-4 s wall for 32 parallel cold
-    imports) — without this, that one-time pool startup lands on
-    whichever query happens to hit the Python boundary first
-    (measured: the first IVF build read 4.6 s cold vs 1.2 s warm).
+    job. A local[N] session forks N workers the first time an
+    Arrow/pandas stage runs, and every worker imports pandas+pyarrow
+    (~2-4 s wall for 32 parallel cold imports) — without this, that
+    one-time pool startup lands on whichever query happens to hit
+    the Python boundary first (measured: the first IVF build read
+    4.6 s cold vs 1.2 s warm).
     Same stance as the bench's untimed warm passes: shared
     infrastructure init must not be charged to one operator. Workers
     are reused for the life of the process (spark.python.worker.reuse
     default), so this runs once per session's context."""
-    import os as _os
-
-    if _os.environ.get("PDFX_WARM_WORKERS", "1") == "0":
-        return
     sc = spark.sparkContext
     if sc.applicationId in _WARMED:
         return

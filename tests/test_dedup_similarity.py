@@ -253,6 +253,36 @@ class TestConversationMerge:
 
 
 @pytest.mark.slow
+def test_longest_wins_all_null_source_matches_oracle(spark, tmp_path):
+    """q_longest_wins flags a conflict only on >1 distinct non-null
+    text: an all-null source is not a conflict (the oracle's
+    COUNT(DISTINCT text) > 1 is false there), and neither is one text
+    beside nulls."""
+    import duckdb
+
+    from pdfextraction_spark.oracle.driver_oracles import oracle_sql
+    from pdfextraction_spark.queries.relational import q_longest_wins
+
+    docs = pd.DataFrame({
+        "doc_id": pd.array([1, 2, 3, 4, 5, 6, 7], dtype="int64"),
+        "text": [None, None, "aa", "bbb", "cc", None, "cc"],
+        "source": ["nulls", "nulls", "diff", "diff", "same", "same", "same"],
+    })
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+
+    got = (q_longest_wins(spark, str(tmp_path)).toPandas()
+           .set_index("source")["conflict_detected"].to_dict())
+    assert got == {"nulls": False, "diff": True, "same": False}
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path / 'documents.parquet'}')")
+    want = (con.execute(oracle_sql()["longest_wins_merge"]).fetchdf()
+            .set_index("source")["conflict_detected"].to_dict())
+    assert {k: bool(v) for k, v in want.items()} == got
+
+
+@pytest.mark.slow
 class TestIVF:
     def test_ivf_recall_vs_brute_force(self, emb):
         from pyspark.sql import functions as F

@@ -1,8 +1,9 @@
 """Physical-plan audits: the properties that make the engine hold at
 100 TB must survive refactors — filter pushdown to the scan, column
 pruning, broadcast of small dims, map-side partial aggregation, and
-exactly ONE exchange in the extraction pipeline (the mandated salted
-repartition)."""
+at most ONE exchange in the extraction pipeline (the salted
+repartition, taken only when the planned scan is narrower than the
+cluster)."""
 
 import pytest
 
@@ -49,11 +50,15 @@ class TestPlans:
     def test_extraction_skips_exchange_on_wide_scans(
             self, spark, xs_parquet, tmp_path_factory):
         """Per-turn extraction is row-local, so when the scan already
-        yields >= defaultParallelism files the salted exchange is
+        plans >= defaultParallelism partitions the salted exchange is
         skipped (guide: remove shuffles outright) — and the two paths
-        are value-identical (the contract the auto dial rests on)."""
+        are value-identical (the contract the dial rests on)."""
         import pandas as pd
 
+        from pdfextraction_spark.operators.extract import extract_turns
+        from pdfextraction_spark.operators.partitioning import (
+            prepare_for_extraction,
+        )
         from pdfextraction_spark.pipeline import extract_dataframe
 
         src = spark.read.parquet(xs_parquet)
@@ -62,7 +67,7 @@ class TestPlans:
         turns = spark.read.parquet(wide)
         auto = extract_dataframe(turns, 8)
         assert "Exchange" not in _plan(auto)  # scan-parallel: no shuffle
-        forced = extract_dataframe(turns, 8, shuffle=True)
+        forced = extract_turns(prepare_for_extraction(turns, 8))
         assert _plan(forced).count("Exchange") == 1
 
         def canon(df):
@@ -72,6 +77,57 @@ class TestPlans:
             return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
         pd.testing.assert_frame_equal(canon(auto), canon(forced))
+
+    def test_extraction_splits_few_large_files(
+            self, spark, xs_parquet, tmp_path):
+        """Two files with many row groups each: fewer files than cores,
+        but the scan splits them into >= defaultParallelism partitions,
+        so the dial (planned partitions, not file count) skips the
+        exchange."""
+        import pyarrow.parquet as pq
+
+        from pdfextraction_spark.pipeline import extract_dataframe
+
+        table = pq.read_table(xs_parquet)
+        half = table.num_rows // 2
+        for i, part in enumerate((table.slice(0, half), table.slice(half))):
+            pq.write_table(part, tmp_path / f"part-{i}.parquet",
+                           row_group_size=max(part.num_rows // 8, 1))
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        # xs is small: scale the split size down to a quarter file, as
+        # 128m splits do for multi-GB files
+        size = sum(p.stat().st_size for p in tmp_path.iterdir())
+        spark.conf.set(key, str(size // 8))
+        try:
+            turns = spark.read.parquet(str(tmp_path))
+            assert len(turns.inputFiles()) == 2
+            assert turns.rdd.getNumPartitions() >= \
+                spark.sparkContext.defaultParallelism
+            assert "Exchange" not in _plan(extract_dataframe(turns, 8))
+        finally:
+            spark.conf.set(key, old)
+
+    def test_extraction_dial_starts_no_job(self, spark, xs_parquet):
+        """Deciding whether to take the exchange reads the plan only:
+        even over an upstream aggregate + join (whose partition count
+        AQE settles by running its stages) no Spark job starts."""
+        from pyspark.sql import functions as F
+
+        from pdfextraction_spark.pipeline import extract_dataframe
+
+        sc = spark.sparkContext
+        turns = spark.read.parquet(xs_parquet)
+        sizes = turns.groupBy("conv_id").agg(F.count("*").alias("n_turns"))
+        joined = turns.join(sizes, "conv_id").filter(F.col("n_turns") > 1)
+        group = "extraction-dial"
+        sc.setJobGroup(group, "extract_dataframe plan construction")
+        try:
+            for df in (turns, joined):
+                extract_dataframe(df, 8)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
 
     def test_ann_broadcasts_queries(self, spark):
         import __spark_entry__ as em

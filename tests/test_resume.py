@@ -18,6 +18,21 @@ def s_parquet(tmp_path_factory):
     return write_transcripts_parquet(str(p), "s", total_turns=3000)
 
 
+@pytest.fixture(scope="module")
+def s_multi_parquet(s_parquet, tmp_path_factory):
+    """The same turns as ``s_parquet`` in 8 files: the scan plans
+    >= defaultParallelism partitions, so the job skips the salted
+    exchange."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(s_parquet)
+    d = tmp_path_factory.mktemp("transcripts_s_multi")
+    step = -(-table.num_rows // 8)
+    for i in range(8):
+        pq.write_table(table.slice(i * step, step), d / f"part-{i:05d}.parquet")
+    return str(d)
+
+
 @pytest.mark.slow
 def test_resume_no_duplicates_identical_output(spark, s_parquet, tmp_path):
     out_a = str(tmp_path / "out_uninterrupted")
@@ -80,21 +95,20 @@ def test_skew_salting_bounds_partition_size(spark, s_parquet):
     assert parts["count"].max() <= 64 * 3
 
 
-@pytest.mark.slow
-def test_resume_after_crash_inside_commit_window(spark, s_parquet, tmp_path):
+def _crash_inside_commit_window(spark, src, tmp_path):
     """Crash AFTER a chunk's output append but BEFORE its manifest
     append: the orphan commit's rows must be reconciled away on
     restart, yielding output identical to an uninterrupted run."""
     out_a = str(tmp_path / "out_clean")
     mf_a = str(tmp_path / "mf_clean")
-    run_extraction_job(spark, s_parquet, out_a, mf_a,
+    run_extraction_job(spark, src, out_a, mf_a,
                        num_partitions=8, n_chunks=4)
 
     out_b = str(tmp_path / "out_window")
     mf_b = str(tmp_path / "mf_window")
     with pytest.raises(RuntimeError, match="commit window"):
         run_extraction_job(
-            spark, s_parquet, out_b, mf_b,
+            spark, src, out_b, mf_b,
             num_partitions=8, n_chunks=4, fail_before_manifest_chunk=2,
         )
     # chunk 1 committed fully; chunk 2's rows are on disk but NOT in
@@ -103,7 +117,7 @@ def test_resume_after_crash_inside_commit_window(spark, s_parquet, tmp_path):
     orphan_dirs = [d for d in os.listdir(out_b) if d.startswith("commit_id=")]
     assert len(orphan_dirs) == 2  # 1 committed + 1 orphan
 
-    summary = run_extraction_job(spark, s_parquet, out_b, mf_b,
+    summary = run_extraction_job(spark, src, out_b, mf_b,
                                  num_partitions=8, n_chunks=4)
     assert len(summary["orphan_commits_reconciled"]) == 1
     assert summary["partitions_done_before"] == 2  # only chunk 1's parts
@@ -114,8 +128,24 @@ def test_resume_after_crash_inside_commit_window(spark, s_parquet, tmp_path):
     assert not b.duplicated(["conv_id", "turn_idx"]).any()
     pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
     mf = spark.read.parquet(mf_b).toPandas()
-    assert mf["row_count"].sum() == len(b)
+    assert mf["row_count"].sum() == len(b) == spark.read.parquet(src).count()
     assert mf["commit_id"].notna().all()
+
+
+@pytest.mark.slow
+def test_resume_after_crash_inside_commit_window(spark, s_parquet, tmp_path):
+    """Single input file: each chunk takes the salted exchange."""
+    _crash_inside_commit_window(spark, s_parquet, tmp_path)
+
+
+@pytest.mark.slow
+def test_resume_after_crash_inside_commit_window_multi_file(
+        spark, s_multi_parquet, tmp_path):
+    """Multi-file input: the scan alone spreads each chunk across the
+    cluster, so the job runs with no exchange."""
+    assert spark.read.parquet(s_multi_parquet).rdd.getNumPartitions() >= \
+        spark.sparkContext.defaultParallelism
+    _crash_inside_commit_window(spark, s_multi_parquet, tmp_path)
 
 
 @pytest.mark.slow
