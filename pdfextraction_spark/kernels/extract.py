@@ -1,9 +1,10 @@
-"""Batch extraction dispatcher — the body of the Spark mapInArrow stage.
+"""Batch extraction dispatcher — the body of the Spark extraction UDF.
 
 Takes one Arrow-batch worth of turn texts, detects payload kinds
 vectorized, routes each kind to its kernel, and assembles the output
 columns (payload_kind, extracted_text, spans, blocks_kept,
-blocks_dropped, parse_failed). Replaces the reference's three LLM call
+blocks_dropped, parse_failed); spans come out as one Arrow
+``ListArray`` per batch. Replaces the reference's three LLM call
 sites with its own deterministic machinery (SURVEY.md §2.10).
 
 Envelope decoding has a regex fast path matched to the canonical
@@ -22,6 +23,7 @@ from typing import List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..payload import (
     KIND_HTML,
@@ -30,10 +32,9 @@ from ..payload import (
     _HTML_PREFIX_RE,
     _PDF_PREFIX_RE,
 )
+from ..schema import SPAN_ARROW
 from .htmlstrip import strip_html_doc
 from .layout import reflow_flat
-
-Span = Tuple[str, int, int]
 
 # canonical encoder word shape: {"t": "...", "x0": N, "y0": N, "x1": N, "y1": N}
 _WORD_FAST_RE = re.compile(
@@ -136,34 +137,19 @@ def _decode_envelopes_flat(texts: List[str]):
 
 
 class FlatResult:
-    """Columnar extraction result: spans kept as flat parallel arrays
-    (label/start/end + per-row counts) so the Spark operator can build
-    an Arrow ListArray with zero per-span Python objects."""
+    """Columnar extraction result: per-row NumPy columns plus ``spans``,
+    one Arrow ``ListArray`` of (label, start, end) structs for the whole
+    batch — no per-span Python objects reach the Spark boundary."""
 
-    __slots__ = ("kinds", "text", "span_counts", "span_labels",
-                 "span_starts", "span_ends", "kept", "dropped", "failed")
+    __slots__ = ("kinds", "text", "spans", "kept", "dropped", "failed")
 
     def __init__(self, n: int):
         self.kinds: np.ndarray = np.empty(0, dtype=object)
         self.text = np.empty(n, dtype=object)
-        self.span_counts = np.zeros(n, dtype=np.int32)
-        self.span_labels: List[str] = []
-        self.span_starts: List[int] = []
-        self.span_ends: List[int] = []
+        self.spans: pa.ListArray = pa.array([], type=SPAN_ARROW)  # set per batch
         self.kept = np.zeros(n, dtype=np.int32)
         self.dropped = np.zeros(n, dtype=np.int32)
         self.failed = np.zeros(n, dtype=bool)
-
-    def spans_per_row(self) -> List[List[Span]]:
-        out: List[List[Span]] = []
-        offs = np.r_[0, np.cumsum(self.span_counts)]
-        for i in range(len(self.span_counts)):
-            out.append(
-                list(zip(self.span_labels[offs[i]:offs[i + 1]],
-                         self.span_starts[offs[i]:offs[i + 1]],
-                         self.span_ends[offs[i]:offs[i + 1]]))
-            )
-        return out
 
 
 # content-level dedup default (PDFX_CONTENT_DEDUP=0 to disable, e.g.
@@ -193,30 +179,14 @@ def extract_batch_flat(texts: pd.Series, dedup: Optional[bool] = None) -> FlatRe
 
 
 def _expand_by_codes(u: FlatResult, codes: np.ndarray) -> FlatResult:
-    """Gather a unique-level FlatResult back to row level (vectorized:
-    grouped-arange indexing into the flat span arrays)."""
-    n = len(codes)
-    res = FlatResult(n)
+    """Gather a unique-level FlatResult back to row level."""
+    res = FlatResult(len(codes))
     res.kinds = u.kinds[codes]
     res.text = u.text[codes]
+    res.spans = u.spans.take(codes)
     res.kept = u.kept[codes]
     res.dropped = u.dropped[codes]
     res.failed = u.failed[codes]
-    res.span_counts = u.span_counts[codes]
-    u_off = np.r_[0, np.cumsum(u.span_counts)].astype(np.int64)
-    lengths = res.span_counts.astype(np.int64)
-    total = int(lengths.sum())
-    if total:
-        starts = u_off[codes]
-        # grouped arange: for each row, indices [start, start+len)
-        reps = np.repeat(starts - np.r_[0, np.cumsum(lengths)[:-1]], lengths)
-        idx = np.arange(total, dtype=np.int64) + reps
-        lab = np.asarray(u.span_labels, dtype=object)
-        st = np.asarray(u.span_starts, dtype=np.int64)
-        en = np.asarray(u.span_ends, dtype=np.int64)
-        res.span_labels = lab[idx].tolist()
-        res.span_starts = st[idx].tolist()
-        res.span_ends = en[idx].tolist()
     return res
 
 
@@ -229,6 +199,7 @@ def _extract_rows(s: pd.Series) -> FlatResult:
     # spans accumulate per row index; build per-kind then reorder once
     row_spans_label: List[Optional[List[str]]] = [None] * n
     row_spans_se: List[Optional[Tuple[List[int], List[int]]]] = [None] * n
+    counts = np.zeros(n, dtype=np.int32)
 
     plain_idx = np.flatnonzero(res.kinds == KIND_PLAIN)
     if len(plain_idx):
@@ -238,7 +209,7 @@ def _extract_rows(s: pd.Series) -> FlatResult:
             if t:
                 row_spans_label[i] = ["text"]
                 row_spans_se[i] = ([0], [len(t)])
-                res.span_counts[i] = 1
+                counts[i] = 1
                 res.kept[i] = 1
 
     html_idx = np.flatnonzero(res.kinds == KIND_HTML)
@@ -248,7 +219,7 @@ def _extract_rows(s: pd.Series) -> FlatResult:
         if spans:
             row_spans_label[i] = [sp[0] for sp in spans]
             row_spans_se[i] = ([sp[1] for sp in spans], [sp[2] for sp in spans])
-            res.span_counts[i] = len(spans)
+            counts[i] = len(spans)
         res.kept[i], res.dropped[i], res.failed[i] = k, dcount, f
 
     pdf_idx = np.flatnonzero(res.kinds == KIND_PDF)
@@ -264,7 +235,7 @@ def _extract_rows(s: pd.Series) -> FlatResult:
                 if t:
                     row_spans_label[i] = ["text"]
                     row_spans_se[i] = ([0], [len(t)])
-                    res.span_counts[i] = 1
+                    counts[i] = 1
                     res.kept[i] = 1
                 res.failed[i] = True
                 continue
@@ -285,16 +256,31 @@ def _extract_rows(s: pd.Series) -> FlatResult:
             if labels:
                 row_spans_label[i] = labels
                 row_spans_se[i] = (starts, ends)
-                res.span_counts[i] = len(labels)
+                counts[i] = len(labels)
             res.kept[i] = len(lines)
             res.failed[i] = len(lines) == 0
 
+    flat_labels: List[str] = []
+    flat_starts: List[int] = []
+    flat_ends: List[int] = []
     for i in range(n):
         if row_spans_label[i] is not None:
-            res.span_labels.extend(row_spans_label[i])
+            flat_labels.extend(row_spans_label[i])
             st, en = row_spans_se[i]
-            res.span_starts.extend(st)
-            res.span_ends.extend(en)
+            flat_starts.extend(st)
+            flat_ends.extend(en)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    res.spans = pa.ListArray.from_arrays(
+        pa.array(offsets),
+        pa.StructArray.from_arrays(
+            [pa.array(flat_labels, type=pa.string()),
+             pa.array(flat_starts, type=pa.int32()),
+             pa.array(flat_ends, type=pa.int32())],
+            fields=list(SPAN_ARROW.value_type),
+        ),
+        type=SPAN_ARROW,
+    )
     return res
 
 
@@ -306,7 +292,8 @@ def extract_batch(texts: pd.Series) -> pd.DataFrame:
         {
             "payload_kind": res.kinds,
             "extracted_text": res.text,
-            "spans": res.spans_per_row(),
+            "spans": [[(sp["label"], sp["start"], sp["end"]) for sp in row]
+                      for row in res.spans.to_pylist()],
             "blocks_kept": res.kept,
             "blocks_dropped": res.dropped,
             "parse_failed": res.failed,

@@ -154,6 +154,32 @@ def _slice_join(items: list, starts: np.ndarray, ends: np.ndarray,
     return out
 
 
+def _flatten_docs(
+    doc_words: Sequence[Optional[Sequence[Tuple[str, float, float, float, float]]]]
+):
+    """Per-doc word lists -> the flat cores' arguments ``(n_docs,
+    doc_sizes, t_arr, coord, none_mask)``, the layout the envelope
+    decoder emits. A None entry (undecodable envelope) is masked."""
+    n_docs = len(doc_words)
+    flat_t: List[str] = []
+    flat_coord: List[Tuple[float, float, float, float]] = []
+    doc_sizes = np.zeros(n_docs, dtype=np.int64)
+    for di, words in enumerate(doc_words):
+        if not words:
+            continue
+        doc_sizes[di] = len(words)
+        for w in words:
+            flat_t.append(w[0])
+            flat_coord.append((w[1], w[2], w[3], w[4]))
+    return (
+        n_docs,
+        doc_sizes,
+        np.asarray(flat_t, dtype=object),
+        np.asarray(flat_coord, dtype=np.float64).reshape(-1, 4),
+        np.array([w is None for w in doc_words], dtype=bool),
+    )
+
+
 def reflow_batch(
     doc_words: Sequence[Optional[Sequence[Tuple[str, float, float, float, float]]]]
 ):
@@ -167,27 +193,7 @@ def reflow_batch(
         list per document of (label, line_text) tuples — same contract
         as oracle.spatial.reflow; None entries stay None.
     """
-    n_docs = len(doc_words)
-    flat_t: List[str] = []
-    flat_coord: List[Tuple[float, float, float, float]] = []
-    doc_sizes = np.zeros(n_docs, dtype=np.int64)
-    for di, words in enumerate(doc_words):
-        if not words:
-            continue
-        doc_sizes[di] = len(words)
-        for w in words:
-            flat_t.append(w[0])
-            flat_coord.append((w[1], w[2], w[3], w[4]))
-    none_mask = np.array([w is None for w in doc_words], dtype=bool)
-    if not flat_t:
-        return [None if none_mask[i] else [] for i in range(n_docs)]
-    return reflow_flat(
-        n_docs,
-        doc_sizes,
-        np.asarray(flat_t, dtype=object),
-        np.asarray(flat_coord, dtype=np.float64),
-        none_mask,
-    )
+    return reflow_flat(*_flatten_docs(doc_words))
 
 
 def reflow_flat(

@@ -24,7 +24,7 @@ from ..config import (
     TABLE_MIN_ROWS,
     TABLE_ROW_GAP,
 )
-from .layout import _DOC_STRIDE, _anchored_lines, _segment_starts
+from .layout import _DOC_STRIDE, _anchored_lines, _flatten_docs, _segment_starts
 
 
 def _find_header_span(header: str, texts: List[str], cy: np.ndarray,
@@ -156,50 +156,24 @@ def tables_batch(
     Returns per doc a list of {"headers", "columns", "rows"} dicts
     (None stays None) — same contract as oracle.tables.extract_doc_tables.
     """
-    n_docs = len(doc_words)
-    flat_t: List[str] = []
-    flat_coord: List[Tuple[float, float, float, float]] = []
-    doc_sizes = np.zeros(n_docs, dtype=np.int64)
-    for di, words in enumerate(doc_words):
-        if not words:
-            continue
-        doc_sizes[di] = len(words)
-        for w in words:
-            flat_t.append(w[0])
-            flat_coord.append((w[1], w[2], w[3], w[4]))
-    results = [None if doc_words[i] is None else [] for i in range(n_docs)]
-    if not flat_t:
-        return results
-    return tables_flat(
-        n_docs, doc_sizes, np.asarray(flat_t, dtype=object),
-        np.asarray(flat_coord, dtype=np.float64),
-        np.array([w is None for w in doc_words], dtype=bool),
-    )
+    return tables_flat(*_flatten_docs(doc_words))
 
 
 def spacing_stats_batch(
     doc_words: Sequence[Optional[Sequence[Tuple[str, float, float, float, float]]]]
 ):
+    """spacing_stats_flat over per-doc word lists (None -> zeros)."""
+    n_docs, doc_sizes, t_arr, coord, _ = _flatten_docs(doc_words)
+    return spacing_stats_flat(n_docs, doc_sizes, t_arr, coord)
+
+
+def spacing_stats_flat(n_docs, doc_sizes, t_arr, coord):
     """Vectorized A1 word-spacing stats (spatial_preprocessor.py:422-463)
-    for a batch: per doc (avg, median, population std) over same-line
-    (|Δy0| <= 5) non-negative reading-order gaps. Median is the
-    reference's sorted[n//2] upper median."""
-    n_docs = len(doc_words)
+    over the flat decoder layout: per doc (avg, median, population std)
+    over same-line (|Δy0| <= 5) non-negative reading-order gaps, zeros
+    for a doc without gaps. Median is the reference's sorted[n//2]
+    upper median."""
     out = np.zeros((n_docs, 3), dtype=np.float64)
-    flat_t: List[str] = []
-    flat_coord: List[Tuple[float, float, float, float]] = []
-    doc_sizes = np.zeros(n_docs, dtype=np.int64)
-    for di, words in enumerate(doc_words):
-        if not words:
-            continue
-        doc_sizes[di] = len(words)
-        for w in words:
-            flat_t.append(w[0])
-            flat_coord.append((w[1], w[2], w[3], w[4]))
-    if not flat_t:
-        return out
-    t_arr = np.asarray(flat_t, dtype=object)
-    coord = np.asarray(flat_coord, dtype=np.float64)
     d = np.repeat(np.arange(n_docs, dtype=np.int64), doc_sizes)
     keep = (pd.Series(t_arr, dtype="object").str.strip().str.len() > 0).to_numpy()
     coord, d = coord[keep], d[keep]

@@ -1,92 +1,71 @@
-"""Spark extraction operator — one fused mapInArrow stage.
+"""Spark extraction operator — one scalar Arrow UDF over ``text``.
 
 The reference's three sequential steps (classify -> identify ->
 extract, app.py:206-904) collapse into a single narrow Arrow stage
 (SURVEY.md §7.1): detect payload kind, strip/reflow, emit text +
-spans + metrics. No shuffle; whole batches flow Arrow -> NumPy ->
-Arrow. Span structs are built via ``ListArray.from_arrays`` over flat
-label/start/end arrays — zero per-span Python objects cross the
-boundary."""
+spans + metrics. Only ``text`` crosses into Python; the UDF returns
+one struct (``schema.EXTRACTED_ARROW``) that a single projection
+expands, while the key columns stay in the JVM. No shuffle; whole
+batches flow Arrow -> NumPy -> Arrow."""
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
 
 from ..kernels.extract import extract_batch_flat
 from ..schema import EXTRACTED_ARROW
 
-# ts passes through (zero-copy) when present so event-time streaming
-# windows can run downstream of the extraction stage
+# ts passes through when present so event-time streaming windows can
+# run downstream of the extraction stage
 _PASSTHROUGH = ["conv_id", "turn_idx", "role", "ts"]
 
 
-def _spans_list_array(res) -> pa.ListArray:
-    offsets = pa.array(
-        np.r_[np.int32(0), np.cumsum(res.span_counts, dtype=np.int64)].astype(
-            np.int32
-        )
-    )
-    struct = pa.StructArray.from_arrays(
+def _extract_text(text: pa.Array) -> pa.Array:
+    res = extract_batch_flat(text.to_pandas())
+    return pa.StructArray.from_arrays(
         [
-            pa.array(res.span_labels, type=pa.string()),
-            pa.array(res.span_starts, type=pa.int32()),
-            pa.array(res.span_ends, type=pa.int32()),
+            pa.array(res.kinds, type=pa.string()),
+            pa.array(res.text, type=pa.string()),
+            res.spans,
+            pa.array(res.kept, type=pa.int32()),
+            pa.array(res.dropped, type=pa.int32()),
+            pa.array(res.failed, type=pa.bool_()),
         ],
-        names=["label", "start", "end"],
+        fields=list(EXTRACTED_ARROW),
     )
-    return pa.ListArray.from_arrays(offsets, struct)
 
 
-def _make_extract_fn(has_ts: bool):
-    def _extract_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+# a DataType (not a DDL string) return type: no active session needed
+_extract_udf = F.arrow_udf(_extract_text, from_arrow_type(EXTRACTED_ARROW))
+
+
+def _make_extract_fn(*_):
+    """The stage as a mapInArrow body over batches carrying ``text``.
+    Only perfbench calls it (its in-process worker-body timing); the
+    arguments are ignored."""
+    def _batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            texts = batch.column("text").to_pandas()
-            res = extract_batch_flat(texts)
-            arrays = [
-                batch.column("conv_id"),
-                batch.column("turn_idx").cast(pa.int32()),
-                batch.column("role"),
-            ]
-            names = ["conv_id", "turn_idx", "role"]
-            if has_ts:
-                arrays.append(batch.column("ts"))
-                names.append("ts")
-            arrays += [
-                pa.array(res.kinds, type=pa.string()),
-                pa.array(res.text, type=pa.string()),
-                _spans_list_array(res),
-                pa.array(res.kept, type=pa.int32()),
-                pa.array(res.dropped, type=pa.int32()),
-                pa.array(res.failed, type=pa.bool_()),
-            ]
-            names += ["payload_kind", "extracted_text", "spans",
-                      "blocks_kept", "blocks_dropped", "parse_failed"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            yield pa.RecordBatch.from_struct_array(
+                _extract_text(batch.column("text")))
 
-    return _extract_batches
+    return _batches
 
 
 def extract_turns(turns: DataFrame) -> DataFrame:
     """Apply the fused extraction stage to a transcripts DataFrame.
 
     Input requires (conv_id, turn_idx, role, text); ts is carried
-    through when present. Narrow transformation — preserves
-    partitioning.
+    through when present, turn_idx comes out as int. Narrow
+    transformation — preserves partitioning.
     """
-    has_ts = "ts" in turns.columns
-    cols = [c for c in _PASSTHROUGH if c in turns.columns] + ["text"]
-    ts_ddl = (
-        f"ts {turns.schema['ts'].dataType.simpleString()}, " if has_ts else ""
+    keys = [c for c in _PASSTHROUGH if c in turns.columns]
+    return (
+        turns.withColumn("turn_idx", F.col("turn_idx").cast("int"))
+        .select(*keys, _extract_udf("text").alias("_x"))
+        .select(*keys, "_x.*")
     )
-    ddl = (
-        "conv_id string, turn_idx int, role string, "
-        + ts_ddl
-        + "payload_kind string, extracted_text string, "
-        "spans array<struct<label:string,start:int,end:int>>, "
-        "blocks_kept int, blocks_dropped int, parse_failed boolean"
-    )
-    return turns.select(*cols).mapInArrow(_make_extract_fn(has_ts), ddl)

@@ -10,7 +10,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..kernels.extract import _decode_envelopes_flat, detect_kinds
-from ..kernels.tables import spacing_stats_batch
+from ..kernels.tables import spacing_stats_flat
 from ..payload import KIND_PDF
 
 _DDL = ("conv_id string, turn_idx int, avg_spacing double, "
@@ -30,43 +30,19 @@ _SCHEMA = pa.schema(
 def _batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     for batch in it:
         texts = batch.column("text").to_pandas()
-        kinds = detect_kinds(texts)
-        pdf_idx = np.flatnonzero(kinds == KIND_PDF)
-        conv = batch.column("conv_id").to_pylist()
-        turn = batch.column("turn_idx").to_pylist()
-        out = {"conv_id": [], "turn_idx": [], "stats": []}
-        if len(pdf_idx):
-            sv = texts.fillna("").to_numpy(dtype=object)
-            pdf_texts = [sv[i] for i in pdf_idx.tolist()]
-            sizes, t_arr, coord, failed = _decode_envelopes_flat(pdf_texts)
-            # rebuild per-doc word lists is unnecessary: stats kernel
-            # takes the flat layout too via a thin shim
-            docs = []
-            off = 0
-            for j in range(len(pdf_texts)):
-                k = int(sizes[j])
-                if failed[j]:
-                    docs.append(None)
-                else:
-                    docs.append(
-                        [(t_arr[off + m], *coord[off + m]) for m in range(k)]
-                    )
-                off += k
-            stats = spacing_stats_batch(docs)
-            for j, i in enumerate(pdf_idx.tolist()):
-                if docs[j] is None:
-                    continue
-                out["conv_id"].append(conv[i])
-                out["turn_idx"].append(turn[i])
-                out["stats"].append(stats[j])
-        st = np.asarray(out["stats"]) if out["stats"] else np.zeros((0, 3))
+        pdf_idx = np.flatnonzero(detect_kinds(texts) == KIND_PDF)
+        sv = texts.to_numpy(dtype=object)
+        sizes, t_arr, coord, failed = _decode_envelopes_flat(
+            [sv[i] for i in pdf_idx.tolist()])
+        stats = spacing_stats_flat(len(pdf_idx), sizes, t_arr, coord)[~failed]
+        rows = pdf_idx[~failed]
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(out["conv_id"], type=pa.string()),
-                pa.array(out["turn_idx"], type=pa.int32()),
-                pa.array(st[:, 0] if len(st) else [], type=pa.float64()),
-                pa.array(st[:, 1] if len(st) else [], type=pa.float64()),
-                pa.array(st[:, 2] if len(st) else [], type=pa.float64()),
+                batch.column("conv_id").take(rows),
+                batch.column("turn_idx").take(rows).cast(pa.int32()),
+                pa.array(stats[:, 0], type=pa.float64()),
+                pa.array(stats[:, 1], type=pa.float64()),
+                pa.array(stats[:, 2], type=pa.float64()),
             ],
             schema=_SCHEMA,
         )

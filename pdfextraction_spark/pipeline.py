@@ -5,7 +5,7 @@
       -> [only when the planned scan is narrower than the cluster]
          salted repartition by hash(conv_id) (+ turn-range salt)
          -> sortWithinPartitions(conv_id, turn_idx)
-      -> fused mapInArrow extraction stage
+      -> fused extraction stage (one scalar Arrow UDF over text)
       -> append output parquet (lineage columns)
       -> append per-partition manifest rows (metrics)
 

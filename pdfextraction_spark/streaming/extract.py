@@ -4,7 +4,7 @@ The reference has no streaming surface (SURVEY.md §2.9) and the north
 rule specifies a resumable BATCH job — that remains the primary mode
 (pipeline.py). This wrapper exists because the fused extraction stage
 is stateless, so it composes with ``readStream`` unchanged: micro-batch
-ingestion of transcript files -> the same mapInArrow kernels ->
+ingestion of transcript files -> the same Arrow UDF kernels ->
 append sink with checkpointing (exactly-once via the streaming
 commit log, the streaming analogue of our manifest protocol).
 

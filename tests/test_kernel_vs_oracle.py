@@ -141,10 +141,7 @@ def test_content_dedup_expansion_identical():
     b = extract_batch_flat(texts, dedup=False)
     assert list(a.text) == list(b.text)
     assert list(a.kinds) == list(b.kinds)
-    assert a.span_labels == b.span_labels
-    assert a.span_starts == b.span_starts
-    assert a.span_ends == b.span_ends
-    assert (a.span_counts == b.span_counts).all()
+    assert a.spans.equals(b.spans)
     assert (a.kept == b.kept).all()
     assert (a.dropped == b.dropped).all()
     assert (a.failed == b.failed).all()

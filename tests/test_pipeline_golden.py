@@ -37,6 +37,28 @@ def test_spark_pipeline_matches_golden(spark, xs_parquet):
 
 
 @pytest.mark.slow
+def test_extract_output_schema_contract(spark, xs_parquet):
+    """The stage's output schema is fixed: the key columns pass through
+    (ts only when present), turn_idx comes out as int whatever its
+    input width, and the extracted fields follow."""
+    from pyspark.sql import functions as F
+
+    from pdfextraction_spark.operators.extract import extract_turns
+
+    fields = ("payload_kind:string,extracted_text:string,"
+              "spans:array<struct<label:string,start:int,end:int>>,"
+              "blocks_kept:int,blocks_dropped:int,parse_failed:boolean>")
+    with_ts = ("struct<conv_id:string,turn_idx:int,role:string,"
+               "ts:timestamp_ntz," + fields)
+    turns = spark.read.parquet(xs_parquet)
+    assert extract_turns(turns).schema.simpleString() == with_ts
+    assert extract_turns(turns.drop("ts")).schema.simpleString() == (
+        "struct<conv_id:string,turn_idx:int,role:string," + fields)
+    wide_idx = turns.withColumn("turn_idx", F.col("turn_idx").cast("bigint"))
+    assert extract_turns(wide_idx).schema.simpleString() == with_ts
+
+
+@pytest.mark.slow
 def test_pathological_inputs_survive(spark, tmp_path):
     """Adversarial payloads must not kill the Arrow batch: multi-MB
     single turn, deeply nested HTML, 20k-word envelope, NUL bytes,

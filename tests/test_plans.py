@@ -5,11 +5,21 @@ at most ONE exchange in the extraction pipeline (the salted
 repartition, taken only when the planned scan is narrower than the
 cluster)."""
 
+import re
+
 import pytest
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_one_text_only_udf(plan: str) -> None:
+    """The extraction stage is ONE scalar Arrow UDF whose only input is
+    ``text`` (expanding its struct must not re-evaluate it per field)."""
+    assert plan.count("ArrowEvalPython") == 1
+    assert "MapInArrow" not in plan
+    assert re.search(r"ArrowEvalPython \[_extract_text\(text#\d+\)#\d+\]", plan)
 
 
 @pytest.mark.slow
@@ -42,6 +52,7 @@ class TestPlans:
         turns = spark.read.parquet(xs_parquet)
         plan = _plan(extract_dataframe(turns, 8))
         assert plan.count("Exchange") == 1  # only the salted repartition
+        _assert_one_text_only_udf(plan)
         # tool is pruned at the scan; ts passes through for event-time
         assert "tool" not in plan.split("ReadSchema:")[1]
         assert ("ReadSchema: struct<conv_id:string,turn_idx:int,"
@@ -67,6 +78,7 @@ class TestPlans:
         turns = spark.read.parquet(wide)
         auto = extract_dataframe(turns, 8)
         assert "Exchange" not in _plan(auto)  # scan-parallel: no shuffle
+        _assert_one_text_only_udf(_plan(auto))
         forced = extract_turns(prepare_for_extraction(turns, 8))
         assert _plan(forced).count("Exchange") == 1
 
